@@ -22,7 +22,7 @@ discipline as hash60/hash60_sql).
 
 Scale shape: a per-row projection — no shuffle, no state. The
 canonical string (or better, ``hash60(canonical_url(u))``) is what
-enters the bloom/cuckoo seen bank and the per-host budget key, so
+enters the bloom seen bank and the per-host budget key, so
 two raw spellings of one URL can never double-fetch.
 """
 

@@ -54,12 +54,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
-def _dir_rows(path: str) -> int:
-    """Row count from parquet footers (driver-side metadata read —
-    the Iceberg manifest count; no Spark job)."""
-    return sum(f["rows"] for f in _dir_files(path))
-
-
 def _dir_files(path: str) -> list[dict]:
     """Per-file (i.e. per-written-partition) row counters from the
     parquet footers — the manifest's per-partition lineage: each
@@ -173,20 +167,7 @@ class Lakehouse:
     def manifest(self, table: str, snapshot: int | None = None) -> dict:
         snap = self.current_snapshot(table) if snapshot is None else snapshot
         with open(os.path.join(self._tdir(table), f"snap-{snap:06d}.json")) as f:
-            m = json.load(f)
-        if "layers" not in m:  # pre-MoR manifest (round-1 layout)
-            # backfill real row counts from the parquet footers so
-            # layer_rows()/n_rows() stay correct on cross-version resume
-            m["layers"] = [
-                {
-                    "dir": d,
-                    "seq": m["snapshot"],
-                    "rows": _dir_rows(os.path.join(self._tdir(table), d)),
-                }
-                for d in m["files"]
-            ]
-            m["n_rows"] = sum(l["rows"] for l in m["layers"])
-        return m
+            return json.load(f)
 
     def layer_rows(self, table: str, snapshot: int | None = None) -> int:
         """Rows added by the given (default: HEAD) commit — the wave

@@ -2,6 +2,9 @@
 
 north_rule: "each iteration canonicalizes and hashes candidate URLs,
 tests membership against a partitioned bloom/cuckoo URL-seen filter".
+Either kind meets that; this bloom bank is the engine's only one. A
+cuckoo filter adds deletion, which only a TTL or sliding-window seen
+set would use, and the engine never deletes from the seen set.
 The reference's seen set is an in-memory Python set
 (graph.py:16,42-44,111-113) — exact but bounded by one process's RAM.
 At 10^10 keys, an exact per-wave anti-join is shuffle-bound on the

@@ -132,7 +132,7 @@ def admit_candidates(
          64-bit seen key; min url is a deterministic tiebreak of
          identical canonical strings),
       4. anti-join the persistent seen set by key (or feed the
-         bloom/cuckoo bank's probe in place of the exact join).
+         bloom bank's probe in place of the exact join).
 
     `seen_keys`: one `seen_key` column (pass the bank-backed maybe-
     seen survivors for the filter fast path). hash_fn defaults to

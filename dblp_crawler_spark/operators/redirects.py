@@ -6,7 +6,7 @@ page under every alias and pollutes the seen set with intermediate
 hops. The reference never needs this (its one host serves stable
 URLs); at web scale it's a standard frontier-admission step: resolve
 src → final, then canonicalize + hash the FINAL url into the
-bloom/cuckoo bank.
+bloom seen bank.
 
 Semantics mirror real HTTP clients: follow at most ``max_hops``
 redirects (curl caps at 50, browsers ~20); a chain still unresolved

@@ -41,6 +41,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from .. import schemas
 from ..fixtures import SEED_PRIORITY, person_url
 from ..lakehouse import Lakehouse
+from ..operators.bloom import BloomBank
 from ..operators.frontier import (
     crawler_filter,
     dedup_new_pubs,
@@ -80,14 +81,11 @@ class CrawlConfig:
     # get floor(wave_ms / delay) fetch slots per wave (None = delay
     # not modeled; only host_budget applies)
     wave_ms: int | None = None
-    # seen-set scale path: probabilistic pre-filter before the exact
-    # anti-join (north_rule "partitioned bloom/cuckoo URL-seen
-    # filter"). Results are identical either way — the filter only
-    # routes definitely-new rows around the big anti-join. kind:
-    # "bloom" (operators/bloom.py) or "cuckoo" (operators/cuckoo.py;
-    # supports deletion, e.g. TTL-expired URLs re-entering the crawl).
+    # seen-set scale path: the partitioned bloom bank
+    # (operators/bloom.py) pre-filters candidates before the exact
+    # anti-join. Results are identical either way — the filter only
+    # routes definitely-new rows around the big anti-join.
     use_bloom: bool = False
-    seen_filter_kind: str = "bloom"
     bloom_buckets: int = 32
     bloom_bits: int = 1 << 17
     # F2 output-filter hook (graph.py:68-72): prune at emission only;
@@ -104,16 +102,6 @@ class CrawlConfig:
     # per wave; on the compact cadence their smallest layers are
     # size-tier merged back under this bound (0 = never)
     max_append_layers: int = 8
-    # AQE during the wave core. The wave DAG has a FIXED shape
-    # (broadcast fetch join, budget-bounded batches, keyed MoR
-    # commits), so adaptive re-planning buys nothing and each AQE
-    # stage materialization adds driver latency — measured ~70
-    # jobs/wave on tiny fixtures with AQE on (BENCH.md A/B). Default
-    # off for the wave body only (restored after each wave); turn on
-    # for clusters where a single wave shuffles many TB and runtime
-    # coalesce/skew-split across hundreds of executors pays for the
-    # extra scheduling round-trips.
-    adaptive_waves: bool = False
     # S1 fetch-join regime (the r4 scale lesson, measured in BENCH.md):
     #   'broadcast' — broadcast the scheduled KEYS into the page scan.
     #     Right for budget-bounded waves; the broadcast build is a
@@ -136,6 +124,20 @@ class CrawlConfig:
     fetch_auto_threshold: int = 1_000_000
 
 
+# removed CrawlConfig fields → the only value this engine honours. An
+# older crawl_state.json resumes if it holds exactly that value; any
+# other would silently change what the resumed crawl does.
+_REMOVED_FIELDS = {"seen_filter_kind": "bloom", "adaptive_waves": False}
+
+
+def _drop_removed_fields(config: dict) -> dict:
+    config = dict(config)
+    for name, supported in _REMOVED_FIELDS.items():
+        if name in config and config.pop(name) != supported:
+            raise ValueError(f"cannot resume: removed CrawlConfig field {name}={supported!r} is required")
+    return config
+
+
 class CrawlEngine:
     def __init__(self, spark: SparkSession, lake: Lakehouse, config: CrawlConfig) -> None:
         self.spark = spark
@@ -148,14 +150,9 @@ class CrawlEngine:
         # incrementally-tracked pending count (None → recount once);
         # saves a full MoR frontier resolve+count job per wave
         self._remain = None
-        if config.seen_filter_kind == "cuckoo":
-            from ..operators.cuckoo import CuckooBank
-
-            self.bloom = CuckooBank(lake, n_buckets=config.bloom_buckets)
-        else:
-            from ..operators.bloom import BloomBank
-
-            self.bloom = BloomBank(lake, n_buckets=config.bloom_buckets, m_bits=config.bloom_bits)
+        # broadcast-fetch success batches, unpersisted at wave end
+        self._fetch_scratch: list[DataFrame] = []
+        self.bloom = BloomBank(lake, n_buckets=config.bloom_buckets, m_bits=config.bloom_bits)
 
     # ---- state manifest (resume/lineage, O7) -----------------------------
     @property
@@ -182,7 +179,7 @@ class CrawlEngine:
         partially-written wave) and continue."""
         with open(os.path.join(lake.root, "crawl_state.json")) as f:
             state = json.load(f)
-        cfg = CrawlConfig(**state["config"])
+        cfg = CrawlConfig(**_drop_removed_fields(state["config"]))
         cfg.rules = [list(r) for r in cfg.rules]
         eng = cls(spark, lake, cfg)
         eng.wave = state["wave"]
@@ -274,22 +271,25 @@ class CrawlEngine:
         so a fresh session re-declares the (external) table over the
         existing files via CREATE TABLE ... CLUSTERED BY ... LOCATION
         — exactly what tools/throughput_job.py does for the images
-        store. The build is O(pages) ONE TIME per pages snapshot (the
-        marker records snapshot + bucket count; a TTL refresh of the
-        pages table invalidates it)."""
+        store. The build is O(pages) ONE TIME per (pages snapshot,
+        bucket count): table name, path and marker all carry the
+        bucket count, and the marker records the snapshot, so a TTL
+        refresh of the pages table invalidates it."""
         import hashlib
 
         root = self.lake.root
-        path = os.path.join(root, "pages_person_bucketed")
-        marker = path + ".json"
         n = self.cfg.fetch_buckets
-        tbl = "pages_b_" + hashlib.md5(root.encode()).hexdigest()[:10]
+        # one layout per bucket count: engines with different
+        # fetch_buckets on one lake root must not rebuild each other's
+        path = os.path.join(root, f"pages_person_bucketed_{n}")
+        marker = path + ".json"
+        tbl = f"pages_b{n}_" + hashlib.md5(root.encode()).hexdigest()[:10]
         pages_snap = self.lake.current_snapshot("pages")
         built = None
         if os.path.exists(marker):
             with open(marker) as f:
                 built = json.load(f)
-        if built is None or built.get("pages_snapshot") != pages_snap or built.get("n_buckets") != n:
+        if built is None or built.get("pages_snapshot") != pages_snap:
             proj = (
                 self.lake.read("pages")
                 .filter(F.col("kind") == "person")
@@ -307,8 +307,12 @@ class CrawlEngine:
                 .option("path", path)
                 .saveAsTable(tbl)
             )
-            with open(marker, "w") as f:
+            # marker last and atomically: a crash mid-build leaves the
+            # old (or no) marker, so the next call rebuilds
+            fd, tmp = tempfile.mkstemp(dir=root)
+            with os.fdopen(fd, "w") as f:
                 json.dump({"pages_snapshot": pages_snap, "n_buckets": n}, f)
+            os.replace(tmp, marker)
         elif not self.spark.catalog.tableExists(tbl):
             person_ddl = schemas.PERSON_PAYLOAD.simpleString()
             self.spark.sql(f"""
@@ -354,12 +358,16 @@ class CrawlEngine:
         return succ.unionByName(failed.select(*succ.columns))
 
     def run_wave(self) -> dict:
-        """One BFS wave, with AQE toggled per CrawlConfig.adaptive_waves
-        for the duration of the wave body (session conf is restored
-        either way — queries outside the engine keep their setting)."""
+        """One BFS wave with AQE off for the wave body; the session's
+        setting is restored either way, so queries outside the engine
+        keep theirs. The wave DAG has a fixed shape (broadcast fetch
+        join, budget-bounded batches, keyed MoR commits): adaptive
+        re-planning buys nothing there, and each AQE stage
+        materialization adds driver latency (BENCH.md round-3 A/B: 54.8
+        vs 32.4 jobs/wave on the fixture crawl)."""
         conf = self.spark.conf
         prev = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", str(self.cfg.adaptive_waves).lower())
+        conf.set("spark.sql.adaptive.enabled", "false")
         try:
             return self._run_wave_body()
         finally:
@@ -469,7 +477,6 @@ class CrawlEngine:
         # scheduled batch is the only source of 'expanded' in the
         # delta), so the count rides the frontier commit's existing
         # Observation below — one fewer action per wave.
-        self._fetch_scratch: list[DataFrame] = []
         fetched = self._fetch_join(sched, n_sched).cache()
         ok = F.col("person").isNotNull()
         succ = fetched.filter(ok)
@@ -640,6 +647,7 @@ class CrawlEngine:
         fetched.unpersist()
         for df in self._fetch_scratch:
             df.unpersist()
+        self._fetch_scratch.clear()
         self.wave = w + 1
         if remain == 0 and n_new_pubs == 0:
             self.done = True

@@ -190,25 +190,6 @@ def test_append_nonempty_skips_empty_batches(spark, lake):
     assert {r.key for r in lake.read("t").collect()} == {"a", "b"}
 
 
-def test_pre_mor_manifest_backfills_real_row_counts(spark, lake):
-    """Round-1 manifests (no 'layers') must resolve layer_rows/n_rows
-    from the parquet footers on cross-version resume, not -1/KeyError."""
-    import json
-    import os
-
-    lake.overwrite("t", _df(spark, [("a", 0), ("b", 0), ("c", 0)]))
-    snap = lake.current_snapshot("t")
-    mpath = os.path.join(lake._tdir("t"), f"snap-{snap:06d}.json")
-    with open(mpath) as f:
-        m = json.load(f)
-    legacy = {"snapshot": m["snapshot"], "committed_at": m["committed_at"], "files": m["files"]}
-    with open(mpath, "w") as f:
-        json.dump(legacy, f)
-    assert lake.layer_rows("t") == 3
-    assert lake.n_rows("t") == 3
-    assert lake.read("t").count() == 3
-
-
 def test_merge_small_layers_bounds_append_table(spark, lake):
     """Size-tiered merge: an append-per-wave table's layer count
     stays bounded over a long crawl (30 appends here), read result

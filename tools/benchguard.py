@@ -24,8 +24,9 @@ import subprocess
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: paths whose edits leak into running measurements (package code is
-#: re-imported by forked workers; tests/docs are not imported at all)
-GUARDED = ("dblp_crawler_spark/", "tools/")
+#: re-imported by forked workers, __spark_entry__.py defines the timed
+#: entries; tests/docs are not imported at all)
+GUARDED = ("dblp_crawler_spark/", "tools/", "__spark_entry__.py")
 
 
 def git_state(repo: str = REPO) -> dict:

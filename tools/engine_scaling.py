@@ -53,7 +53,7 @@ def _spark(master: str | None, shuffle: int | None, workdir: str) -> SparkSessio
         shuffle_partitions=shuffle,
         extra_conf={
             "spark.sql.warehouse.dir": os.path.join(workdir, "warehouse"),
-            # fixed-shape wave DAG (see CrawlConfig.adaptive_waves)
+            # fixed-shape wave DAG (see CrawlEngine.run_wave)
             "spark.sql.adaptive.enabled": "false",
             # REST stage telemetry is read after the timed runs
             "spark.ui.enabled": "true",

@@ -32,6 +32,7 @@ def stage_telemetry(spark, top: int = 20, min_tasks: int = 2) -> list[dict]:
             continue
         row = {
             "stage": st["stageId"],
+            "attempt": st.get("attemptId", 0),
             "name": st["name"].split("\n")[0][:90],
             "n_tasks": st["numCompleteTasks"],
             "input_bytes": st.get("inputBytes", 0),
@@ -49,7 +50,7 @@ def stage_telemetry(spark, top: int = 20, min_tasks: int = 2) -> list[dict]:
     for row in rows:
         try:
             q = get(
-                f"/applications/{app}/stages/{row['stage']}/0/taskSummary"
+                f"/applications/{app}/stages/{row['stage']}/{row['attempt']}/taskSummary"
                 "?quantiles=0.5,1.0"
             )
             med, mx = q["duration"][0], q["duration"][1]
