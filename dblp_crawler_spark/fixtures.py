@@ -324,7 +324,8 @@ def write_tables(spark, lake, u: Universe) -> None:
     """Load the universe into lakehouse tables for the engine."""
     from . import schemas
 
-    lake.overwrite("pages", spark.createDataFrame(pages_rows(u), schemas.PAGES))
+    # keyed for the MERGEs of freshness.refresh_pages and ccf_catalog
+    lake.overwrite("pages", spark.createDataFrame(pages_rows(u), schemas.PAGES), merge_keys=["url"])
     if u.images:
         lake.overwrite("images", spark.createDataFrame(u.images, schemas.IMAGES))
     seeds = [{"seed_type": "pid", "value": p} for p in u.seeds_pids] + [
@@ -334,6 +335,7 @@ def write_tables(spark, lake, u: Universe) -> None:
     lake.overwrite(
         "ccf_rank",
         spark.createDataFrame([{"journal_key": k, "rank": v} for k, v in u.ccf_rank.items()], schemas.CCF_RANK),
+        merge_keys=["journal_key"],
     )
     lake.overwrite("robots", spark.createDataFrame(u.robots, schemas.ROBOTS))
     lake.overwrite(

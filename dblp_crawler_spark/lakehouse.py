@@ -26,9 +26,9 @@ the same contract over parquet:
     rewrites the table. `compact()` folds the layers back into one
     (Iceberg's rewrite_data_files maintenance action) to bound read
     amplification; callers run it on a cadence.
-  * unkeyed tables keep the legacy copy-on-write MERGE (anti-join +
-    union + full overwrite) — acceptable for small dims, never used
-    for per-wave state.
+  * MERGE verbs (`merge_upsert`, `append_new`) run only on a table
+    keyed by the same columns (or create it so) and raise
+    `ValueError` on any other: there is no copy-on-write MERGE.
 
 On a real cluster the same call sites bind to an Iceberg catalog
 (`spark.sql("MERGE INTO ...")`); the interface is deliberately the
@@ -227,32 +227,37 @@ class Lakehouse:
         self._commit(table, [layer], snap, {**(meta or {}), **extra})
         return snap
 
-    def create_empty(self, table: str, schema: StructType, meta: dict | None = None) -> int:
+    def create_empty(
+        self, table: str, schema: StructType, meta: dict | None = None, merge_keys: list[str] | None = None
+    ) -> int:
         """Commit an empty snapshot without running a Spark job —
         a metadata-only truncate (Iceberg: TRUNCATE TABLE). The
-        schema is recorded in the manifest so reads stay typed."""
+        schema is recorded in the manifest so reads stay typed;
+        `merge_keys` declares the table keyed, as in `overwrite`."""
         snap = self._next_snap(table)
+        extra = {"merge_keys": merge_keys} if merge_keys else {}
         self._commit(
-            table, [], snap, {**(meta or {}), "schema_json": json.dumps(schema.jsonValue())}
+            table, [], snap, {**(meta or {}), "schema_json": json.dumps(schema.jsonValue()), **extra}
         )
         return snap
 
-    def append(self, table: str, df: DataFrame, schema: StructType, meta: dict | None = None) -> int:
-        """Fast append: write ONLY the new rows; the manifest carries
-        the previous snapshot's layers forward (Iceberg fast-append —
-        metadata-only, no data rewrite). Old snapshots stay readable.
-        On a keyed table the appended batch must hold only new keys
-        (see module contract)."""
+    def _commit_on_head(self, table: str, layer: dict, snap: int, meta: dict | None) -> int:
+        """Commit `layer` on top of HEAD: the manifest carries HEAD's
+        layers and key spec forward (Iceberg fast-append — metadata-
+        only, no data rewrite). A missing table starts unkeyed."""
         head = self.current_snapshot(table)
-        if head is None:
-            return self.overwrite(table, df, meta)
-        m = self.manifest(table, head)
-        snap = self._next_snap(table)
-        layer = self._write_layer(table, df, snap)
-        mk = m.get("merge_keys")
-        extra = {"merge_keys": mk} if mk else {}
+        m = self.manifest(table, head) if head is not None else {"layers": []}
+        extra = {"merge_keys": m["merge_keys"]} if m.get("merge_keys") else {}
         self._commit(table, m["layers"] + [layer], snap, {**(meta or {}), **extra})
         return snap
+
+    def append(self, table: str, df: DataFrame, schema: StructType, meta: dict | None = None) -> int:
+        """Fast append: write ONLY the new rows as a layer on top of
+        HEAD. Old snapshots stay readable. On a keyed table the
+        appended batch must hold only new keys (see module
+        contract)."""
+        snap = self._next_snap(table)
+        return self._commit_on_head(table, self._write_layer(table, df, snap), snap, meta)
 
     def append_nonempty(
         self, table: str, df: DataFrame, schema: StructType, meta: dict | None = None
@@ -260,26 +265,18 @@ class Lakehouse:
         """Append that commits ONLY when the batch has rows; returns
         the number of rows committed. Steady-state crawl waves often
         produce empty batches — committing them would grow one empty
-        layer + manifest per wave forever on never-compacted append
-        tables. Emptiness is read from the written parquet footers
-        (no extra Spark job); an empty write is rolled back by
-        deleting the uncommitted layer dir (HEAD never moved, so no
-        reader can have seen it)."""
+        layer + manifest per wave. Emptiness is read from the written
+        parquet footers (no extra Spark job); an empty write is
+        rolled back by deleting the uncommitted layer dir (HEAD never
+        moved, so no reader can have seen it)."""
         import shutil
 
-        head = self.current_snapshot(table)
-        if head is None:
-            snap = self.overwrite(table, df, meta)
-            return self.layer_rows(table, snap)
-        m = self.manifest(table, head)
         snap = self._next_snap(table)
         layer = self._write_layer(table, df, snap)
         if layer["rows"] == 0:
             shutil.rmtree(self._data_dir(table, snap), ignore_errors=True)
             return 0
-        mk = m.get("merge_keys")
-        extra = {"merge_keys": mk} if mk else {}
-        self._commit(table, m["layers"] + [layer], snap, {**(meta or {}), **extra})
+        self._commit_on_head(table, layer, snap, meta)
         return layer["rows"]
 
     def append_local(
@@ -306,12 +303,17 @@ class Lakehouse:
             "rows": len(rows),
             "files": [{"file": "part-00000.parquet", "rows": len(rows)}],
         }
-        head = self.current_snapshot(table)
-        prev = self.manifest(table, head)["layers"] if head is not None else []
-        mk = self.manifest(table, head).get("merge_keys") if head is not None else None
-        extra = {"merge_keys": mk} if mk else {}
-        self._commit(table, prev + [layer], snap, {**(meta or {}), **extra})
-        return snap
+        return self._commit_on_head(table, layer, snap, meta)
+
+    def _exists_keyed_by(self, table: str, keys: list[str]) -> bool:
+        """False for a missing table; a table keyed otherwise is
+        refused (there is no copy-on-write MERGE)."""
+        if not self.exists(table):
+            return False
+        mk = self.manifest(table).get("merge_keys")
+        if mk != keys:
+            raise ValueError(f"table {table} is keyed by {mk}, cannot MERGE on {keys}")
+        return True
 
     def append_new(
         self, table: str, df: DataFrame, keys: list[str], schema: StructType, meta: dict | None = None
@@ -320,17 +322,13 @@ class Lakehouse:
 
         Reference analog: the existence-check-before-write pattern of
         summarizer/neo4j.py:62-68,76-83 and every seen-set guard.
-        Keyed table: one read of current keys, write O(delta) — the
-        unmatched-fresh rows land as a new layer. Unkeyed legacy
-        table: copy-on-write rewrite (kept for small dims only)."""
-        if not self.exists(table):
+        One read of current keys, write O(delta) — the unmatched-
+        fresh rows land as a new layer. A missing table is created
+        keyed by `keys`."""
+        if not self._exists_keyed_by(table, keys):
             return self.overwrite(table, df.dropDuplicates(keys), meta, merge_keys=keys)
-        mk = self.manifest(table).get("merge_keys")
         fresh = df.dropDuplicates(keys).join(self.read(table).select(*keys), on=keys, how="left_anti")
-        if mk == keys:
-            return self.append(table, fresh, schema, meta)
-        old = self.read_or_empty(table, schema)
-        return self.overwrite(table, old.unionByName(fresh), meta)
+        return self.append(table, fresh, schema, meta)
 
     def merge_upsert(
         self, table: str, df: DataFrame, keys: list[str], schema: StructType, meta: dict | None = None
@@ -341,17 +339,13 @@ class Lakehouse:
         in `df` takes the new row (last-writer-wins within `df` is
         the caller's responsibility — pass pre-deduped input).
 
-        Keyed table: the delta IS the commit (new layer, O(delta)
-        write); the merge happens at read time. Unkeyed legacy table:
-        copy-on-write anti-join + union + overwrite."""
+        The delta IS the commit (new layer, O(delta) write); the
+        merge happens at read time. A missing table is created keyed
+        by `keys`."""
         cols = [c.name for c in schema]
-        if not self.exists(table):
+        if not self._exists_keyed_by(table, keys):
             return self.overwrite(table, df.select(*cols), meta, merge_keys=keys)
-        if self.manifest(table).get("merge_keys") == keys:
-            return self.append(table, df.select(*cols), schema, meta)
-        old = self.read_or_empty(table, schema)
-        kept = old.join(df.select(*keys).dropDuplicates(keys), on=keys, how="left_anti")
-        return self.overwrite(table, kept.unionByName(df.select(*cols)), meta)
+        return self.append(table, df.select(*cols), schema, meta)
 
     def compact(self, table: str) -> int:
         """Fold a keyed table's MoR layers into one resolved layer

@@ -224,11 +224,11 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", id_col: str = "do
     two consumers (signature lanes; exact-verify hash sets) — r5
     profile: shingling is ~60% of the sf0.1 entry and the
     un-factored pipeline ran it twice (4.8 s → ~3 s). The persist is
-    spill-safe (MEMORY_AND_DISK) and dropped by Spark's
-    ContextCleaner when the result goes out of scope; at 100 TB the
-    same seam is where a real pipeline writes its shingle/signature
-    intermediate to a table (minhash_delta already persists exactly
-    that state)."""
+    spill-safe (MEMORY_AND_DISK) and released before returning (the
+    pairs are computed eagerly into a local checkpoint); at 100 TB
+    the same seam is where a real pipeline writes its shingle/
+    signature intermediate to a table (minhash_delta already
+    persists exactly that state)."""
     from pyspark import StorageLevel
 
     from ..functions.hashing import xx64
@@ -248,14 +248,17 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text", id_col: str = "do
         F.col(id_col),
         F.transform("__sh_arr", lambda t: hash_fn(t)).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
-    return (
+    pairs = (
         cands.join(sh.withColumnsRenamed({id_col: "a", "sh": "sh_a", "n_sh": "na"}), "a")
         .join(sh.withColumnsRenamed({id_col: "b", "sh": "sh_b", "n_sh": "nb"}), "b")
         .withColumn("ninter", F.size(F.array_intersect("sh_a", "sh_b")))
         .withColumn("jaccard", F.col("ninter") / (F.col("na") + F.col("nb") - F.col("ninter")))
         .filter(F.col("jaccard") >= threshold)
         .select("a", "b", "jaccard")
+        .localCheckpoint()
     )
+    base.unpersist()
+    return pairs
 
 
 # ---- simhash ----------------------------------------------------------------

@@ -157,10 +157,13 @@ def cache_policy_sql(src: str = "responses") -> str:
 
 def refresh_pages(lake, new_rows: DataFrame) -> int:
     """Write-through refresh: MERGE the re-fetched rows over the
-    stale ones, keyed on url (downloader.py:78-80 analog)."""
+    stale ones, keyed on url (downloader.py:78-80 analog), then fold
+    the delta in so `pages` reads stay one layer. Returns the
+    committed snapshot."""
     from .. import schemas
 
-    return lake.merge_upsert("pages", new_rows, ["url"], schemas.PAGES)
+    lake.merge_upsert("pages", new_rows, ["url"], schemas.PAGES)
+    return lake.compact("pages")
 
 
 # RFC 9110 Retry-After: delta-seconds or an HTTP-date. 429/503 are

@@ -41,7 +41,7 @@ from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 from .. import schemas
 from ..fixtures import SEED_PRIORITY, person_url
 from ..lakehouse import Lakehouse
-from ..operators.bloom import BloomBank
+from ..operators.bloom import FILTER_SCHEMA, BloomBank
 from ..operators.frontier import (
     crawler_filter,
     dedup_new_pubs,
@@ -62,15 +62,34 @@ PENDING_PUBS = StructType(
     ]
 )
 
-_STATE_TABLES = [
-    "frontier", "seen_pubs", "pending_pubs", "crawl_order",
-    "nodes", "edges", "publications", "emitted_persons", "metrics",
-    "seen_filter",
-]
+# Every table a wave writes: name → (schema, merge keys; None = an
+# append/overwrite table). It drives initialize (so reads are total),
+# the snapshots resume rolls back, and the wave-end layer upkeep.
+WAVE_TABLES: dict[str, tuple[StructType, list[str] | None]] = {
+    "frontier": (schemas.FRONTIER, ["pid"]),
+    "seen_pubs": (schemas.SEEN_PUBS, None),
+    "pending_pubs": (PENDING_PUBS, None),
+    "crawl_order": (schemas.CRAWL_ORDER, None),
+    "nodes": (schemas.NODES, None),
+    "edges": (schemas.EDGES, None),
+    "publications": (schemas.PUBLICATIONS_OUT, None),
+    "emitted_persons": (schemas.EMITTED_PERSONS, None),
+    "metrics": (schemas.METRICS, None),
+    "journal_init_counts": (schemas.JOURNAL_INIT_COUNTS, None),
+    "seen_filter": (FILTER_SCHEMA, ["bucket"]),
+}
+
+# Layer upkeep (Iceberg rewrite_data_files cadence): every
+# LAYER_UPKEEP_EVERY waves keyed tables fold their MoR layers into one
+# and append tables are size-tier merged to ≤ APPEND_LAYER_BOUND layers.
+LAYER_UPKEEP_EVERY = 8
+APPEND_LAYER_BOUND = 8
 
 
 @dataclass
 class CrawlConfig:
+    """What one crawl does; layer upkeep is not configurable (LAYER_UPKEEP_EVERY)."""
+
     year: int = 2000
     rules: list = field(default_factory=list)  # CNF keyword rules
     host_budget: int | None = None
@@ -93,15 +112,6 @@ class CrawlConfig:
     # everything (the reference's default hook).
     output_year: int | None = None
     output_rules: list | None = None
-    # fold the frontier's MoR delta layers into one resolved layer
-    # every N waves (Iceberg rewrite_data_files cadence) — bounds
-    # read amplification while keeping per-wave writes O(wave delta)
-    compact_every: int = 8
-    # append-heavy tables (crawl_order, seen_pubs, edges,
-    # publications, nodes, emitted_persons, metrics) gain one layer
-    # per wave; on the compact cadence their smallest layers are
-    # size-tier merged back under this bound (0 = never)
-    max_append_layers: int = 8
     # S1 fetch-join regime (the r4 scale lesson, measured in BENCH.md):
     #   'broadcast' — broadcast the scheduled KEYS into the page scan.
     #     Right for budget-bounded waves; the broadcast build is a
@@ -127,7 +137,8 @@ class CrawlConfig:
 # removed CrawlConfig fields → the only value this engine honours. An
 # older crawl_state.json resumes if it holds exactly that value; any
 # other would silently change what the resumed crawl does.
-_REMOVED_FIELDS = {"seen_filter_kind": "bloom", "adaptive_waves": False}
+_REMOVED_FIELDS = {"seen_filter_kind": "bloom", "adaptive_waves": False,
+                   "compact_every": LAYER_UPKEEP_EVERY, "max_append_layers": APPEND_LAYER_BOUND}
 
 
 def _drop_removed_fields(config: dict) -> dict:
@@ -165,7 +176,7 @@ class CrawlEngine:
             "next_seq": self.next_seq,
             "done": self.done,
             "config": dataclasses.asdict(self.cfg),
-            "snapshots": {t: self.lake.current_snapshot(t) for t in _STATE_TABLES},
+            "snapshots": {t: self.lake.current_snapshot(t) for t in WAVE_TABLES},
         }
         fd, tmp = tempfile.mkstemp(dir=self.lake.root)
         with os.fdopen(fd, "w") as f:
@@ -220,18 +231,11 @@ class CrawlEngine:
         self.lake.overwrite(
             "frontier",
             seed_rows.select(*[f.name for f in schemas.FRONTIER]),
-            merge_keys=["pid"],
+            merge_keys=WAVE_TABLES["frontier"][1],
         )
-        for t, sch in [
-            ("seen_pubs", schemas.SEEN_PUBS), ("pending_pubs", PENDING_PUBS),
-            ("crawl_order", schemas.CRAWL_ORDER), ("nodes", schemas.NODES),
-            ("edges", schemas.EDGES), ("publications", schemas.PUBLICATIONS_OUT),
-            ("emitted_persons", schemas.EMITTED_PERSONS), ("metrics", schemas.METRICS),
-            # person-seeded crawls never hit the wave-0 journal branch:
-            # pre-commit an empty rollup so the read side is total
-            ("journal_init_counts", schemas.JOURNAL_INIT_COUNTS),
-        ]:
-            self.lake.create_empty(t, sch)  # metadata-only, no Spark job
+        for t, (sch, keys) in WAVE_TABLES.items():
+            if t != "frontier":
+                self.lake.create_empty(t, sch, merge_keys=keys)  # metadata-only, no Spark job
         self.wave, self.next_seq, self.done = 0, 0, False
         self._save_state()
 
@@ -501,8 +505,8 @@ class CrawlEngine:
         # ---- emission of last wave's pubs (graph.py:139-152) -------------
         # pending count comes from last wave's commit manifest (no job);
         # with an output filter (F2) the emitted subset must be counted
-        pend = lake.read_or_empty("pending_pubs", PENDING_PUBS)
-        n_emit = lake.n_rows("pending_pubs") if lake.exists("pending_pubs") else 0
+        pend = lake.read("pending_pubs")
+        n_emit = lake.n_rows("pending_pubs")
         has_out_filter = cfg.output_year is not None or bool(cfg.output_rules)
         if n_emit and has_out_filter:
             pend = output_filter(pend, cfg.output_year, cfg.output_rules)
@@ -651,22 +655,13 @@ class CrawlEngine:
         self.wave = w + 1
         if remain == 0 and n_new_pubs == 0:
             self.done = True
-        if cfg.compact_every and self.wave % cfg.compact_every == 0:
-            # fold MoR layers (result-identical; bounds the per-read
-            # resolution cost between compactions). compact() is a
-            # no-op on unkeyed or single-layer tables.
-            lake.compact("frontier")
-            lake.compact(self.bloom.table)
-            if cfg.max_append_layers:
-                # size-tier merge the per-wave append layers so long
-                # crawls keep bounded manifests (ADVICE r2 / verdict
-                # item 8); O(merged rows) per merge, LSM-amortized
-                for t in (
-                    "crawl_order", "seen_pubs", "edges", "publications",
-                    "nodes", "emitted_persons", "metrics",
-                ):
-                    if lake.exists(t):
-                        lake.merge_small_layers(t, cfg.max_append_layers)
+        if self.wave % LAYER_UPKEEP_EVERY == 0:
+            # result-identical; the size-tier merge is LSM-amortized
+            for t, (_, keys) in WAVE_TABLES.items():
+                if keys:
+                    lake.compact(t)
+                else:
+                    lake.merge_small_layers(t, APPEND_LAYER_BOUND)
         self._save_state()
         return m
 

@@ -8,6 +8,7 @@ under the same seed list and politeness budget.
 import pytest
 
 from dblp_crawler_spark import fixtures, oracle
+from dblp_crawler_spark.plans import crawl
 from dblp_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
 
 
@@ -78,28 +79,28 @@ def test_wave_metrics_match(spark, lake, universe):
     assert e_jc == res.journal_init_counts
 
 
-def test_engine_with_bloom_matches_oracle(spark, lake):
+def test_engine_with_bloom_matches_oracle(spark, lake, monkeypatch):
     """Bloom pre-filter path must be result-identical to the exact
     anti-join path (false positives re-checked, no false negatives).
-    compact_every=2 forces mid-crawl MoR compaction of BOTH the
-    frontier and the bloom bank — results must be unchanged."""
+    Layer upkeep every 2 waves forces mid-crawl MoR compaction of BOTH
+    the frontier and the bloom bank — results must be unchanged."""
+    monkeypatch.setattr(crawl, "LAYER_UPKEEP_EVERY", 2)
+    monkeypatch.setattr(crawl, "APPEND_LAYER_BOUND", 2)
     u = fixtures.make_universe(n_authors=60, n_pubs=150, n_venues=5, seed=3)
     res = oracle.run_oracle(u, host_budget=None, max_attempts=2)
     run_engine(spark, lake, u, host_budget=None, max_attempts=2, use_bloom=True,
-               bloom_buckets=8, bloom_bits=1 << 12, compact_every=2,
-               max_append_layers=2)
+               bloom_buckets=8, bloom_bits=1 << 12)
     e_order, e_seen, e_nodes, e_edges, e_pubs = collect_engine(lake)
     o_order, o_seen, o_nodes, o_edges, o_pubs = oracle_views(res, u)
     assert e_seen == o_seen
     assert e_order == o_order
     assert e_nodes == o_nodes and e_edges == o_edges and e_pubs == o_pubs
     # verdict r2 item 8: append-per-wave tables stay layer-bounded
-    # under the compaction cadence (max_append_layers=2 + one layer
-    # per wave since the last merge) with results unchanged (above)
+    # under the upkeep cadence (bound 2 + one layer per wave since
+    # the last merge) with results unchanged (above)
     for t in ("crawl_order", "seen_pubs", "edges", "publications",
               "nodes", "emitted_persons", "metrics"):
-        if lake.exists(t):
-            assert lake.n_layers(t) <= 2 + 2, f"{t} layers unbounded"
+        assert lake.n_layers(t) <= 2 + 2, f"{t} layers unbounded"
 
 
 def test_engine_bucketed_fetch_matches_oracle(spark, lake, universe):
@@ -169,10 +170,10 @@ def test_wave_job_budget(spark, lake):
 def test_one_frontier_commit_per_wave(spark, lake):
     """The status delta and the wave's discoveries land in ONE
     key-disjoint MoR layer: the frontier snapshot advances exactly
-    once per steady-state wave (compaction cadence aside)."""
+    once per steady-state wave (3 waves: no layer upkeep runs)."""
     u = fixtures.make_universe(n_authors=40, n_pubs=100, n_venues=4, seed=9)
     fixtures.write_tables(spark, lake, u)
-    cfg = CrawlConfig(year=u.year_filter, rules=u.keyword_rules, max_attempts=2, compact_every=0)
+    cfg = CrawlConfig(year=u.year_filter, rules=u.keyword_rules, max_attempts=2)
     eng = CrawlEngine(spark, lake, cfg)
     eng.initialize()
     eng.run_wave()  # wave 0
@@ -285,8 +286,8 @@ def test_long_crawl_bounded(spark, tmp_path):
     (host_budget=2 against the ~85%-hot-host fixture universe) takes
     dozens of waves to drain the backlog. Over that horizon the MoR
     machinery must keep (a) per-table layer counts bounded by the
-    size-tier merge (max_append_layers) + the inter-compaction
-    accumulation window (compact_every), (b) manifest size bounded
+    size-tier merge (APPEND_LAYER_BOUND) + the inter-upkeep
+    accumulation window (LAYER_UPKEEP_EVERY), (b) manifest size bounded
     (the r2 append_nonempty fix: empty tail waves commit nothing),
     and (c) a mid-crawl kill/resume at ~wave 25 bit-identical to the
     oracle's uninterrupted run."""
@@ -313,23 +314,19 @@ def test_long_crawl_bounded(spark, tmp_path):
     n_waves = 25 + len(metrics)
     assert n_waves >= 40, f"soak too short to exercise layering: {n_waves} waves"
 
-    # (a) layer counts: ≤ max_append_layers survivors after a merge
-    #     + ≤ compact_every new layers before the next one runs
-    bound = cfg.max_append_layers + cfg.compact_every + 1
-    tables = ["frontier", "crawl_order", "seen_pubs", "edges",
-              "publications", "nodes", "emitted_persons", "metrics"]
-    for t in tables:
-        if lake.exists(t):
-            n = lake.n_layers(t)
-            assert n <= bound, f"{t}: {n} layers after {n_waves} waves (bound {bound})"
+    # (a) layer counts: ≤ APPEND_LAYER_BOUND survivors after a merge
+    #     + ≤ LAYER_UPKEEP_EVERY new layers before the next one runs
+    bound = crawl.APPEND_LAYER_BOUND + crawl.LAYER_UPKEEP_EVERY + 1
+    for t in crawl.WAVE_TABLES:
+        n = lake.n_layers(t)
+        assert n <= bound, f"{t}: {n} layers after {n_waves} waves (bound {bound})"
 
     # (b) manifest size: the head manifest stays O(bound) entries —
     #     not O(n_waves) — for every state table
-    for t in tables:
-        if lake.exists(t):
-            man = lake.manifest(t)
-            assert len(man["layers"]) <= bound, (t, len(man["layers"]))
-            assert len(json.dumps(man)) < 64 * 1024, (t, "manifest blew up")
+    for t in crawl.WAVE_TABLES:
+        man = lake.manifest(t)
+        assert len(man["layers"]) <= bound, (t, len(man["layers"]))
+        assert len(json.dumps(man)) < 64 * 1024, (t, "manifest blew up")
 
     # (c) resumed run is bit-identical to the uninterrupted oracle
     res = oracle.run_oracle(u, host_budget=2, max_attempts=2)

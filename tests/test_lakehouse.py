@@ -1,6 +1,8 @@
 """Lakehouse: snapshot commits, fast append, merge semantics,
 time travel — the Iceberg contract the engine relies on (O7)."""
 
+import pytest
+
 from dblp_crawler_spark import schemas
 
 
@@ -23,18 +25,21 @@ def test_fast_append_accumulates(spark, lake):
     assert {r.key for r in lake.read("t", snapshot=1).collect()} == {"a", "b"}
 
 
-def test_merge_upsert(spark, lake):
+@pytest.mark.parametrize("verb", ["merge_upsert", "append_new"])
+def test_merge_refuses_table_not_keyed_by_call(spark, lake, verb):
+    """MERGE verbs run only on a table keyed by the call's keys — there
+    is no copy-on-write fallback. An unkeyed or differently keyed
+    table is refused, naming the table and keys, and left as it was."""
+    merge = getattr(lake, verb)
+    batch = _df(spark, [("b", 9), ("c", 1)])
     lake.overwrite("t", _df(spark, [("a", 0), ("b", 0)]))
-    lake.merge_upsert("t", _df(spark, [("b", 9), ("c", 1)]), ["key"], schemas.SEEN_PUBS)
-    got = {r.key: r.wave for r in lake.read("t").collect()}
-    assert got == {"a": 0, "b": 9, "c": 1}
-
-
-def test_append_new_skips_existing(spark, lake):
-    lake.overwrite("t", _df(spark, [("a", 0)]))
-    lake.append_new("t", _df(spark, [("a", 9), ("b", 1)]), ["key"], schemas.SEEN_PUBS)
-    got = {r.key: r.wave for r in lake.read("t").collect()}
-    assert got == {"a": 0, "b": 1}
+    lake.overwrite("w", _df(spark, [("a", 0)]), merge_keys=["wave"])
+    with pytest.raises(ValueError, match=r"table t is keyed by None, cannot MERGE on \['key'\]"):
+        merge("t", batch, ["key"], schemas.SEEN_PUBS)
+    with pytest.raises(ValueError, match=r"table w is keyed by \['wave'\], cannot MERGE on \['key'\]"):
+        merge("w", batch, ["key"], schemas.SEEN_PUBS)
+    assert lake.snapshots("t") == [0] and lake.snapshots("w") == [0]
+    assert {r.key: r.wave for r in lake.read("t").collect()} == {"a": 0, "b": 0}
 
 
 def test_rollback(spark, lake):
@@ -154,6 +159,33 @@ def test_freshness_ttl(spark, lake):
     # override: journals expire too
     stale2 = {r.url for r in stale_urls(pages, now, {"journal": 10}).collect()}
     assert stale2 == {"p_old", "jl_old", "j_old"}
+
+
+def test_refresh_pages_merges_into_one_layer(spark, lake):
+    """freshness.refresh_pages on the fixture page store (keyed by
+    url): re-fetched rows replace their stale versions, new urls are
+    inserted, every other page is untouched, and the delta is folded
+    in so `pages` reads stay one layer."""
+    from pyspark.sql import functions as F
+
+    from dblp_crawler_spark import fixtures
+    from dblp_crawler_spark.operators.freshness import refresh_pages
+
+    u = fixtures.make_universe(n_authors=20, n_pubs=40, n_venues=3, seed=5)
+    fixtures.write_tables(spark, lake, u)
+    pages = lake.read("pages")
+    expected = {r.url: r for r in pages.collect()}
+    picked = sorted(expected)[:3]
+    refetched = pages.filter(F.col("url").isin(picked)).withColumn(
+        "fetched_at", F.lit("2026-01-31 00:00:00").cast("timestamp")
+    )
+    added = pages.filter(F.col("url") == picked[0]).withColumn("url", F.lit("pid/new"))
+    new_rows = refetched.unionByName(added).collect()
+    refresh_pages(lake, spark.createDataFrame(new_rows, schemas.PAGES))
+    expected.update({r.url: r for r in new_rows})
+    assert {r.url: r for r in lake.read("pages").collect()} == expected
+    assert lake.n_layers("pages") == 1
+    assert lake.manifest("pages")["merge_keys"] == ["url"]
 
 
 def test_mor_seq_unaffected_by_data_dir_in_root(spark, tmp_path):
