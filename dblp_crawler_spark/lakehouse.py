@@ -97,14 +97,13 @@ class Lakehouse:
     def exists(self, table: str) -> bool:
         return self.current_snapshot(table) is not None
 
-    def _commit(self, table: str, layers: list[dict], snap: int, meta: dict) -> None:
+    def _commit(self, table: str, layers: list[dict], snap: int, extra: dict) -> None:
         manifest = {
             "snapshot": snap,
             "committed_at": time.time(),
-            "files": [l["dir"] for l in layers],
             "layers": layers,
             "n_rows": sum(l["rows"] for l in layers),
-            **meta,
+            **extra,
         }
         mpath = os.path.join(self._tdir(table), f"snap-{snap:06d}.json")
         with open(mpath, "w") as f:
@@ -211,9 +210,7 @@ class Lakehouse:
             "files": files,
         }
 
-    def overwrite(
-        self, table: str, df: DataFrame, meta: dict | None = None, merge_keys: list[str] | None = None
-    ) -> int:
+    def overwrite(self, table: str, df: DataFrame, merge_keys: list[str] | None = None) -> int:
         """Full-replace commit (Iceberg: REPLACE TABLE ... AS SELECT).
         `merge_keys` declares the table keyed → every later
         `merge_upsert`/`append` is an O(delta) MoR layer. When
@@ -223,45 +220,38 @@ class Lakehouse:
             merge_keys = self.manifest(table).get("merge_keys")
         snap = self._next_snap(table)
         layer = self._write_layer(table, df, snap)
-        extra = {"merge_keys": merge_keys} if merge_keys else {}
-        self._commit(table, [layer], snap, {**(meta or {}), **extra})
+        self._commit(table, [layer], snap, {"merge_keys": merge_keys} if merge_keys else {})
         return snap
 
-    def create_empty(
-        self, table: str, schema: StructType, meta: dict | None = None, merge_keys: list[str] | None = None
-    ) -> int:
+    def create_empty(self, table: str, schema: StructType, merge_keys: list[str] | None = None) -> int:
         """Commit an empty snapshot without running a Spark job —
         a metadata-only truncate (Iceberg: TRUNCATE TABLE). The
         schema is recorded in the manifest so reads stay typed;
         `merge_keys` declares the table keyed, as in `overwrite`."""
         snap = self._next_snap(table)
         extra = {"merge_keys": merge_keys} if merge_keys else {}
-        self._commit(
-            table, [], snap, {**(meta or {}), "schema_json": json.dumps(schema.jsonValue()), **extra}
-        )
+        self._commit(table, [], snap, {"schema_json": json.dumps(schema.jsonValue()), **extra})
         return snap
 
-    def _commit_on_head(self, table: str, layer: dict, snap: int, meta: dict | None) -> int:
+    def _commit_on_head(self, table: str, layer: dict, snap: int) -> int:
         """Commit `layer` on top of HEAD: the manifest carries HEAD's
         layers and key spec forward (Iceberg fast-append — metadata-
         only, no data rewrite). A missing table starts unkeyed."""
         head = self.current_snapshot(table)
         m = self.manifest(table, head) if head is not None else {"layers": []}
         extra = {"merge_keys": m["merge_keys"]} if m.get("merge_keys") else {}
-        self._commit(table, m["layers"] + [layer], snap, {**(meta or {}), **extra})
+        self._commit(table, m["layers"] + [layer], snap, extra)
         return snap
 
-    def append(self, table: str, df: DataFrame, schema: StructType, meta: dict | None = None) -> int:
+    def append(self, table: str, df: DataFrame) -> int:
         """Fast append: write ONLY the new rows as a layer on top of
         HEAD. Old snapshots stay readable. On a keyed table the
         appended batch must hold only new keys (see module
         contract)."""
         snap = self._next_snap(table)
-        return self._commit_on_head(table, self._write_layer(table, df, snap), snap, meta)
+        return self._commit_on_head(table, self._write_layer(table, df, snap), snap)
 
-    def append_nonempty(
-        self, table: str, df: DataFrame, schema: StructType, meta: dict | None = None
-    ) -> int:
+    def append_nonempty(self, table: str, df: DataFrame) -> int:
         """Append that commits ONLY when the batch has rows; returns
         the number of rows committed. Steady-state crawl waves often
         produce empty batches — committing them would grow one empty
@@ -276,12 +266,10 @@ class Lakehouse:
         if layer["rows"] == 0:
             shutil.rmtree(self._data_dir(table, snap), ignore_errors=True)
             return 0
-        self._commit_on_head(table, layer, snap, meta)
+        self._commit_on_head(table, layer, snap)
         return layer["rows"]
 
-    def append_local(
-        self, table: str, rows: list[dict], schema: StructType, meta: dict | None = None
-    ) -> int:
+    def append_local(self, table: str, rows: list[dict], schema: StructType) -> int:
         """Driver-side micro-append: write a tiny parquet layer with
         pyarrow — NO Spark job. For single-row commits (per-wave
         metrics, state stamps) where launching a distributed write
@@ -303,7 +291,7 @@ class Lakehouse:
             "rows": len(rows),
             "files": [{"file": "part-00000.parquet", "rows": len(rows)}],
         }
-        return self._commit_on_head(table, layer, snap, meta)
+        return self._commit_on_head(table, layer, snap)
 
     def _exists_keyed_by(self, table: str, keys: list[str]) -> bool:
         """False for a missing table; a table keyed otherwise is
@@ -315,9 +303,7 @@ class Lakehouse:
             raise ValueError(f"table {table} is keyed by {mk}, cannot MERGE on {keys}")
         return True
 
-    def append_new(
-        self, table: str, df: DataFrame, keys: list[str], schema: StructType, meta: dict | None = None
-    ) -> int:
+    def append_new(self, table: str, df: DataFrame, keys: list[str]) -> int:
         """MERGE ... WHEN NOT MATCHED THEN INSERT (insert-only merge).
 
         Reference analog: the existence-check-before-write pattern of
@@ -326,13 +312,11 @@ class Lakehouse:
         fresh rows land as a new layer. A missing table is created
         keyed by `keys`."""
         if not self._exists_keyed_by(table, keys):
-            return self.overwrite(table, df.dropDuplicates(keys), meta, merge_keys=keys)
+            return self.overwrite(table, df.dropDuplicates(keys), merge_keys=keys)
         fresh = df.dropDuplicates(keys).join(self.read(table).select(*keys), on=keys, how="left_anti")
-        return self.append(table, fresh, schema, meta)
+        return self.append(table, fresh)
 
-    def merge_upsert(
-        self, table: str, df: DataFrame, keys: list[str], schema: StructType, meta: dict | None = None
-    ) -> int:
+    def merge_upsert(self, table: str, df: DataFrame, keys: list[str], schema: StructType) -> int:
         """MERGE ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED INSERT.
 
         Logical result: old rows not matched by key survive; every key
@@ -344,8 +328,8 @@ class Lakehouse:
         by `keys`."""
         cols = [c.name for c in schema]
         if not self._exists_keyed_by(table, keys):
-            return self.overwrite(table, df.select(*cols), meta, merge_keys=keys)
-        return self.append(table, df.select(*cols), schema, meta)
+            return self.overwrite(table, df.select(*cols), merge_keys=keys)
+        return self.append(table, df.select(*cols))
 
     def compact(self, table: str) -> int:
         """Fold a keyed table's MoR layers into one resolved layer

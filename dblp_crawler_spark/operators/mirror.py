@@ -51,22 +51,6 @@ MIRROR_PUBLICATIONS = StructType(
     ]
 )
 
-MIRROR_JOURNALS = StructType([StructField("journal_key", StringType(), False)])
-
-MIRROR_WRITES = StructType(
-    [
-        StructField("dblp_pid", StringType(), False),
-        StructField("title_hash", StringType(), False),
-    ]
-)
-
-MIRROR_PUBLISHES = StructType(
-    [
-        StructField("journal_key", StringType(), False),
-        StructField("title_hash", StringType(), False),
-    ]
-)
-
 
 def person_rows(pages: DataFrame) -> DataFrame:
     """Person upsert rows with the J7 orcid self-lookup: the first
@@ -164,13 +148,11 @@ def mirror_summarize(lake, pages: DataFrame, publications: DataFrame) -> dict[st
     snaps["mirror_publications"] = lake.merge_upsert(
         "mirror_publications", publication_rows(publications), ["title_hash"], MIRROR_PUBLICATIONS
     )
-    snaps["mirror_journals"] = lake.append_new(
-        "mirror_journals", journal_rows(publications), ["journal_key"], MIRROR_JOURNALS
-    )
+    snaps["mirror_journals"] = lake.append_new("mirror_journals", journal_rows(publications), ["journal_key"])
     snaps["mirror_writes"] = lake.append_new(
-        "mirror_writes", write_edges(publications), ["dblp_pid", "title_hash"], MIRROR_WRITES
+        "mirror_writes", write_edges(publications), ["dblp_pid", "title_hash"]
     )
     snaps["mirror_publishes"] = lake.append_new(
-        "mirror_publishes", publish_edges(publications), ["journal_key", "title_hash"], MIRROR_PUBLISHES
+        "mirror_publishes", publish_edges(publications), ["journal_key", "title_hash"]
     )
     return snaps

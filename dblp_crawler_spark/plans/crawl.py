@@ -85,10 +85,19 @@ WAVE_TABLES: dict[str, tuple[StructType, list[str] | None]] = {
 LAYER_UPKEEP_EVERY = 8
 APPEND_LAYER_BOUND = 8
 
+# Fetch plan switch (_fetch_join): a wave scheduling at least this many
+# urls fetches through the bucketed sort-merge join; smaller waves
+# broadcast their keys. The broadcast build is a driver-side,
+# level-independent cost that erased the N→4N scaling margin at a
+# 2M-row wave (0.549 eff, BENCH.md); below the switch it is the cheaper
+# plan. Both plans are result-identical.
+BUCKETED_FETCH_ROWS = 1_000_000
+
 
 @dataclass
 class CrawlConfig:
-    """What one crawl does; layer upkeep is not configurable (LAYER_UPKEEP_EVERY)."""
+    """What one crawl does; layer upkeep (LAYER_UPKEEP_EVERY) and the
+    fetch plan (BUCKETED_FETCH_ROWS) are not configurable."""
 
     year: int = 2000
     rules: list = field(default_factory=list)  # CNF keyword rules
@@ -112,26 +121,9 @@ class CrawlConfig:
     # everything (the reference's default hook).
     output_year: int | None = None
     output_rules: list | None = None
-    # S1 fetch-join regime (the r4 scale lesson, measured in BENCH.md):
-    #   'broadcast' — broadcast the scheduled KEYS into the page scan.
-    #     Right for budget-bounded waves; the broadcast build is a
-    #     driver-side single-thread cost, level-independent, so at
-    #     multi-million-row full-frontier waves it erases the N→4N
-    #     scaling margin (measured 0.549 eff at a 2M-row wave).
-    #   'bucketed' — the page store is laid out hash-bucketed+sorted
-    #     by url (sources/bucketed_store layout; Iceberg bucket-
-    #     transform equivalent). The fetch plans as a sort-merge join
-    #     with ZERO Exchange above the payload scan: the slim
-    #     scheduled keys shuffle into the bucket layout, the payloads
-    #     are read join-aligned in place. No driver constant — the
-    #     10^10-URL-frontier shape. The layout is built once per
-    #     pages snapshot (ensure_bucketed_pages) and re-declared per
-    #     session.
-    #   'auto' — per wave: 'bucketed' once the scheduled batch
-    #     reaches fetch_auto_threshold rows, else 'broadcast'.
-    fetch_mode: str = "broadcast"
+    # bucket count of the page layout the large-wave fetch plan reads
+    # (ensure_bucketed_pages); the plan itself is chosen per wave
     fetch_buckets: int = 128
-    fetch_auto_threshold: int = 1_000_000
 
 
 # removed CrawlConfig fields → the only value this engine honours. An
@@ -139,10 +131,15 @@ class CrawlConfig:
 # other would silently change what the resumed crawl does.
 _REMOVED_FIELDS = {"seen_filter_kind": "bloom", "adaptive_waves": False,
                    "compact_every": LAYER_UPKEEP_EVERY, "max_append_layers": APPEND_LAYER_BOUND}
+# removed fields that only ever chose a physical plan: every plan is
+# oracle-exact, so they are dropped whatever they hold
+_REMOVED_PLAN_FIELDS = ("fetch_mode", "fetch_auto_threshold")
 
 
 def _drop_removed_fields(config: dict) -> dict:
     config = dict(config)
+    for name in _REMOVED_PLAN_FIELDS:
+        config.pop(name, None)
     for name, supported in _REMOVED_FIELDS.items():
         if name in config and config.pop(name) != supported:
             raise ValueError(f"cannot resume: removed CrawlConfig field {name}={supported!r} is required")
@@ -242,18 +239,13 @@ class CrawlEngine:
     # ---- one wave ----------------------------------------------------------
     @property
     def person_pages(self):
-        """(url, person) projection of the page store. The pages
-        table is immutable for the duration of a crawl (TTL refresh
-        happens between crawls).
-
-        broadcast/auto mode: a cached projection — saves one scan per
-        use per wave; at 100 TB the same call site simply stays an
-        (Iceberg-pruned) scan. bucketed mode: the hash-bucketed
-        sorted layout (ensure_bucketed_pages) read in place — no
-        cache (the layout IS the fast path, and pinning multi-TB
-        payload blobs in block storage would evict everything else)."""
-        if self.cfg.fetch_mode == "bucketed":
-            return self.spark.table(self.ensure_bucketed_pages())
+        """Cached (url, person) projection of the page store, read by
+        the broadcast fetch, emission and finalize. The pages table is
+        immutable for the duration of a crawl (TTL refresh happens
+        between crawls), so the cache saves one scan per use per wave;
+        at 100 TB the same call site simply stays an (Iceberg-pruned)
+        scan. The bucketed fetch reads its own layout
+        (ensure_bucketed_pages) instead."""
         if self._person_pages is None:
             self._person_pages = (
                 self.lake.read("pages")
@@ -329,26 +321,26 @@ class CrawlEngine:
 
     def _fetch_join(self, sched: DataFrame, n_sched: int) -> DataFrame:
         """S1: the simulated-HTTP fetch join of the scheduled batch
-        against the person page store, under cfg.fetch_mode. Returns
-        one row per scheduled url with a nullable `person` payload
-        (null = fetch failure). Payload bytes never shuffle in either
-        regime; the difference is where the join's small side goes:
+        against the person page store. Returns one row per scheduled
+        url with a nullable `person` payload (null = fetch failure).
+        The plan follows the batch size `n_sched` (known from the
+        crawl-order commit manifest, no job). Payload bytes never
+        shuffle in either plan; the difference is where the join's
+        small side goes:
 
-          broadcast — the budget-bounded batch broadcasts into the
-            page scan (build-left inner join) + an anti-join recovers
-            failures. Driver-side single-thread broadcast build:
-            fine for bounded waves, level-independent at full-
-            frontier waves (the measured r4 scale break).
-          bucketed — ONE right-outer sort-merge join against the
-            bucketed+sorted layout: zero Exchange and zero broadcast
-            above the payload scan; the slim scheduled keys shuffle
-            into the bucket layout. Failures fall out of the outer
-            join for free (no second anti-join, no broadcast build).
+          n_sched < BUCKETED_FETCH_ROWS: broadcast — the batch
+            broadcasts into the cached page projection (build-left
+            inner join) + an anti-join recovers failures. The
+            driver-side single-thread broadcast build is cheap for
+            bounded waves.
+          n_sched ≥ BUCKETED_FETCH_ROWS: bucketed — ONE right-outer
+            sort-merge join against the bucketed+sorted layout: zero
+            Exchange and zero broadcast above the payload scan; the
+            slim scheduled keys shuffle into the bucket layout.
+            Failures fall out of the outer join for free (no second
+            anti-join, no broadcast build).
         """
-        mode = self.cfg.fetch_mode
-        if mode == "auto":
-            mode = "bucketed" if n_sched >= self.cfg.fetch_auto_threshold else "broadcast"
-        if mode == "bucketed":
+        if n_sched >= BUCKETED_FETCH_ROWS:
             pages = self.spark.table(self.ensure_bucketed_pages())
             # the merge hint pins SMJ even when a tiny fixture store
             # would auto-broadcast — the plan shape is the contract
@@ -364,11 +356,11 @@ class CrawlEngine:
     def run_wave(self) -> dict:
         """One BFS wave with AQE off for the wave body; the session's
         setting is restored either way, so queries outside the engine
-        keep theirs. The wave DAG has a fixed shape (broadcast fetch
-        join, budget-bounded batches, keyed MoR commits): adaptive
-        re-planning buys nothing there, and each AQE stage
-        materialization adds driver latency (BENCH.md round-3 A/B: 54.8
-        vs 32.4 jobs/wave on the fixture crawl)."""
+        keep theirs. The wave DAG has a fixed shape (a fetch plan the
+        engine picks from the scheduled batch size, keyed MoR
+        commits): adaptive re-planning buys nothing there, and each
+        AQE stage materialization adds driver latency (BENCH.md
+        round-3 A/B: 54.8 vs 32.4 jobs/wave on the fixture crawl)."""
         conf = self.spark.conf
         prev = conf.get("spark.sql.adaptive.enabled", "true")
         conf.set("spark.sql.adaptive.enabled", "false")
@@ -469,13 +461,13 @@ class CrawlEngine:
             # empty batches (steady-state tail waves) commit nothing:
             # crawl_order is append-only and never compacted, so an
             # empty layer per wave would grow the manifest unboundedly
-            n_sched = lake.append_nonempty("crawl_order", rows, schemas.CRAWL_ORDER)
+            n_sched = lake.append_nonempty("crawl_order", rows)
             self.next_seq += n_sched
 
         # ---- fetch (S1/S2: join simulates HTTP against the page store) ---
-        # Regime per CrawlConfig.fetch_mode (_fetch_join): broadcast
-        # keys for budget-bounded waves, bucket-aligned SMJ for
-        # full-frontier waves. Payload bytes never shuffle either way.
+        # Plan per batch size (_fetch_join): broadcast keys below
+        # BUCKETED_FETCH_ROWS scheduled urls, bucket-aligned SMJ at or
+        # above it. Payload bytes never shuffle either way.
         # n_succ is NOT counted here: success rows become exactly the
         # status='expanded' rows of this wave's frontier delta (the
         # scheduled batch is the only source of 'expanded' in the
@@ -535,24 +527,16 @@ class CrawlEngine:
                 F.transform("person.pubs", lambda p: p["key"]).alias("pub_keys"),
             )
             node_rows = new_nodes.join(person_rec, "pid", "inner")
-            lake.append("nodes", node_rows.select(*[f.name for f in schemas.NODES]), schemas.NODES)
-            lake.append(
-                "emitted_persons",
-                new_nodes.select("pid", F.lit(w).alias("wave")),
-                schemas.EMITTED_PERSONS,
-            )
+            lake.append("nodes", node_rows.select(*[f.name for f in schemas.NODES]))
+            lake.append("emitted_persons", new_nodes.select("pid", F.lit(w).alias("wave")))
             # J5: canonical-ordered pair self-join per pub
             a, b = ok_auth.alias("a"), ok_auth.alias("b")
             edge_rows = a.join(b, (F.col("a.key") == F.col("b.key")) & (F.col("a.pid") < F.col("b.pid"))).select(
                 F.col("a.pid").alias("src"), F.col("b.pid").alias("dst"), F.col("a.key").alias("pub_key")
             )
-            lake.append("edges", edge_rows, schemas.EDGES)
+            lake.append("edges", edge_rows)
             pub_rows = pend.select(*pub_record_cols("pub", "ccf"), F.lit(True).alias("selected"))
-            lake.append(
-                "publications",
-                pub_rows.select(*[f.name for f in schemas.PUBLICATIONS_OUT]),
-                schemas.PUBLICATIONS_OUT,
-            )
+            lake.append("publications", pub_rows.select(*[f.name for f in schemas.PUBLICATIONS_OUT]))
             ok_auth.unpersist()
 
         # ---- expansion (J2) + filter (P1/P2) + seen dedup (J3) ------------
@@ -582,11 +566,7 @@ class CrawlEngine:
         new_pubs = with_ccf(new_pubs, ccf_rank, F.substring_index(F.col("pub.url"), "/", 3))
         lake.overwrite("pending_pubs", new_pubs.select(*PENDING_PUBS.fieldNames()))
         n_new_pubs = lake.layer_rows("pending_pubs")  # from the commit manifest
-        lake.append(
-            "seen_pubs",
-            lake.read("pending_pubs").select("key", F.lit(w).alias("wave")),
-            schemas.SEEN_PUBS,
-        )
+        lake.append("seen_pubs", lake.read("pending_pubs").select("key", F.lit(w).alias("wave")))
         if cfg.use_bloom:
             # keep the bank exactly in sync with the committed seen set
             self.bloom.add(lake.read("pending_pubs").select("key"))
@@ -689,11 +669,7 @@ class CrawlEngine:
         )
         person_pubs = with_ccf(person_pubs, ccf_rank, F.substring_index(F.col("pub.url"), "/", 3))
         rows = person_pubs.select(*pub_record_cols("pub", "ccf"), F.lit(False).alias("selected"))
-        lake.append(
-            "publications",
-            rows.select(*[f.name for f in schemas.PUBLICATIONS_OUT]),
-            schemas.PUBLICATIONS_OUT,
-        )
+        lake.append("publications", rows.select(*[f.name for f in schemas.PUBLICATIONS_OUT]))
         # release the page-projection cache: a later pages refresh
         # (freshness.refresh_pages) must not serve stale payloads, and
         # repeated engine constructions must not accumulate blocks

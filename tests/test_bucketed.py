@@ -2,9 +2,15 @@
 proven at the plan level (the scale path when a wave is too large to
 broadcast)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
+from dblp_crawler_spark import fixtures
+from dblp_crawler_spark.lakehouse import Lakehouse
+from dblp_crawler_spark.operators.scheduler import politeness_pop
+from dblp_crawler_spark.plans.crawl import BUCKETED_FETCH_ROWS, CrawlConfig, CrawlEngine
 from dblp_crawler_spark.sources import bucketed_store as B
 
 
@@ -78,75 +84,53 @@ def test_ivf_store_partition_pruned(spark, tmp_path):
     probed = {
         r.cell for r in q0.crossJoin(cents_b).select(F.explode(topn).alias("cell")).collect()
     }
-    import re
-
     m = re.search(r"PartitionFilters: \[cell#\d+L? IN \(([-\d,]+)\)", plan)
     assert m, plan
     assert {int(x) for x in m.group(1).split(",")} == probed and 0 < len(probed) < 8
 
 
-@pytest.mark.parametrize("mode", ["broadcast", "auto"])
-def test_fetch_join_on_fresh_engine(spark, tmp_path, mode):
-    """_fetch_join works outside run_wave: the broadcast regime caches
-    its success batch in a per-wave scratch list that must already
-    exist on a freshly constructed engine."""
-    from dblp_crawler_spark import fixtures
-    from dblp_crawler_spark.lakehouse import Lakehouse
-    from dblp_crawler_spark.operators.scheduler import politeness_pop
-    from dblp_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
+@pytest.mark.parametrize(
+    "n_sched", [0, None, BUCKETED_FETCH_ROWS], ids=["broadcast", "auto", "bucketed"]
+)
+def test_fetch_join_on_fresh_engine(spark, tmp_path, n_sched):
+    """The engine's own fetch join (CrawlEngine._fetch_join, the code
+    path run_wave executes) picks its plan from the scheduled batch
+    size, on a freshly constructed engine (the broadcast plan caches
+    its success batch in a scratch list that must already exist).
+    `auto` passes the batch's own row count, as run_wave does; this
+    small wave is below the switch:
 
+      * below BUCKETED_FETCH_ROWS the keys broadcast into the page
+        scan — a BroadcastExchange, no sort-merge join;
+      * at it, ONE sort-merge join with zero BroadcastExchange (no
+        driver-side single-thread build — the measured r4 scale break
+        at 2M-row waves) and exactly one Exchange, on the slim
+        scheduled-key side; the person-page payload scan is the
+        bucketed read (Bucketed: true) with NO Exchange above it —
+        blobs never shuffle.
+
+    Either way every pending url resolves to its page."""
     u = fixtures.make_universe(n_authors=30, n_pubs=80, n_venues=3, seed=11)
     lake = Lakehouse(spark, str(tmp_path / "lake"))
     fixtures.write_tables(spark, lake, u)
-    eng = CrawlEngine(spark, lake, CrawlConfig(year=u.year_filter, fetch_mode=mode))
+    eng = CrawlEngine(spark, lake, CrawlConfig(year=u.year_filter, fetch_buckets=8))
     eng.initialize()
     pending = lake.read("frontier").filter("status = 'pending'")
-    fetched = eng._fetch_join(politeness_pop(pending, None), n_sched=0)
-    assert "BroadcastExchange" in plan_of(fetched)
+    sched = politeness_pop(pending, None)
+    if n_sched is None:
+        n_sched = sched.count()
+    fetched = eng._fetch_join(sched, n_sched=n_sched)
+    plan = plan_of(fetched)
+    if n_sched < BUCKETED_FETCH_ROWS:
+        assert "BroadcastExchange" in plan and "SortMergeJoin" not in plan, plan
+    else:
+        assert "BroadcastExchange" not in plan, plan
+        assert "SortMergeJoin" in plan and "Bucketed: true" in plan, plan
+        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
     n_pending = pending.count()
     assert fetched.filter("person IS NOT NULL").count() == fetched.count() == n_pending > 0
     for df in eng._fetch_scratch:
         df.unpersist()
-
-
-def test_engine_bucketed_fetch_no_blob_exchange(spark, tmp_path):
-    """VERDICT r4 item 1, plan half: the ENGINE's own fetch join
-    (CrawlEngine._fetch_join — the exact code path run_wave executes)
-    in bucketed mode plans as ONE sort-merge join with
-
-      * zero BroadcastExchange anywhere (no driver-side single-thread
-        build — the measured r4 scale break at 2M-row waves), and
-      * exactly one Exchange, on the slim scheduled-key side; the
-        person-page payload scan is the bucketed read (Bucketed:
-        true) with NO Exchange above it — blobs never shuffle.
-    """
-    import re
-
-    from dblp_crawler_spark import fixtures
-    from dblp_crawler_spark.lakehouse import Lakehouse
-    from dblp_crawler_spark.operators.scheduler import politeness_pop
-    from dblp_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
-
-    u = fixtures.make_universe(n_authors=50, n_pubs=120, n_venues=4, seed=5)
-    lake = Lakehouse(spark, str(tmp_path / "lake"))
-    fixtures.write_tables(spark, lake, u)
-    eng = CrawlEngine(
-        spark, lake, CrawlConfig(year=u.year_filter, rules=u.keyword_rules,
-                                 fetch_mode="bucketed", fetch_buckets=8)
-    )
-    eng.initialize()
-    pending = lake.read("frontier").filter("status = 'pending'")
-    sched = politeness_pop(pending, None)
-    fetched = eng._fetch_join(sched, n_sched=0)
-    plan = plan_of(fetched)
-    assert "BroadcastExchange" not in plan, plan
-    assert "SortMergeJoin" in plan, plan
-    assert "Bucketed: true" in plan, plan
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
-    # and the join is real: every pending url resolves to its page
-    n_pending = pending.count()
-    got = fetched.filter("person IS NOT NULL").count()
-    assert got == fetched.count() == n_pending and n_pending > 0
 
 
 def test_bucketed_layout_rebuilds_on_pages_refresh(spark, tmp_path):
@@ -154,14 +138,10 @@ def test_bucketed_layout_rebuilds_on_pages_refresh(spark, tmp_path):
     refresh of the pages table (new snapshot) invalidates the marker
     and the next ensure_bucketed_pages() rebuilds — a stale layout
     can never serve old payloads."""
-    from dblp_crawler_spark import fixtures
-    from dblp_crawler_spark.lakehouse import Lakehouse
-    from dblp_crawler_spark.plans.crawl import CrawlConfig, CrawlEngine
-
     u = fixtures.make_universe(n_authors=30, n_pubs=80, n_venues=3, seed=11)
     lake = Lakehouse(spark, str(tmp_path / "lake"))
     fixtures.write_tables(spark, lake, u)
-    eng = CrawlEngine(spark, lake, CrawlConfig(fetch_mode="bucketed", fetch_buckets=4))
+    eng = CrawlEngine(spark, lake, CrawlConfig(fetch_buckets=4))
     tbl = eng.ensure_bucketed_pages()
     n0 = spark.table(tbl).count()
     # simulate a TTL refresh: re-commit the pages table (new snapshot)
@@ -183,7 +163,7 @@ def test_bucketed_layout_rebuilds_on_pages_refresh(spark, tmp_path):
         return int(next(r.data_type for r in rows if r.col_name == "Num Buckets"))
 
     built4 = _os.stat(marker).st_ino
-    eng8 = CrawlEngine(spark, lake, CrawlConfig(fetch_mode="bucketed", fetch_buckets=8))
+    eng8 = CrawlEngine(spark, lake, CrawlConfig(fetch_buckets=8))
     tbl8 = eng8.ensure_bucketed_pages()
     assert tbl8 != tbl
     assert eng.ensure_bucketed_pages() == tbl

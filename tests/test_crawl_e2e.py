@@ -5,6 +5,8 @@ URL-seen-set match, plus node/edge/publication summary equality,
 under the same seed list and politeness budget.
 """
 
+import os
+
 import pytest
 
 from dblp_crawler_spark import fixtures, oracle
@@ -103,17 +105,18 @@ def test_engine_with_bloom_matches_oracle(spark, lake, monkeypatch):
         assert lake.n_layers(t) <= 2 + 2, f"{t} layers unbounded"
 
 
-def test_engine_bucketed_fetch_matches_oracle(spark, lake, universe):
-    """VERDICT r4 item 1: the scale-safe bucketed fetch join is
-    reachable from CrawlConfig (fetch_mode='bucketed') and is
-    oracle-exact end-to-end — crawl order, seen set, and the full
-    summary all equal the reference semantics, wave for wave. The
-    plan-shape half of the contract (zero Exchange / zero broadcast
-    above the payload scan) is pinned in tests/test_bucketed.py."""
+def test_engine_bucketed_fetch_matches_oracle(spark, lake, universe, monkeypatch):
+    """The scale-safe bucketed fetch join is oracle-exact end-to-end:
+    with the switch at 0 every wave fetches through it, and crawl
+    order, seen set and the full summary all equal the reference
+    semantics. The plan-shape half of the contract (zero Exchange /
+    zero broadcast above the payload scan) is pinned in
+    tests/test_bucketed.py."""
     u = universe
     res = oracle.run_oracle(u, host_budget=8, max_attempts=3)
-    run_engine(spark, lake, u, host_budget=8, max_attempts=3,
-               fetch_mode="bucketed", fetch_buckets=8)
+    monkeypatch.setattr(crawl, "BUCKETED_FETCH_ROWS", 0)
+    run_engine(spark, lake, u, host_budget=8, max_attempts=3, fetch_buckets=8)
+    assert os.path.exists(os.path.join(lake.root, "pages_person_bucketed_8.json"))
     e_order, e_seen, e_nodes, e_edges, e_pubs = collect_engine(lake)
     o_order, o_seen, o_nodes, o_edges, o_pubs = oracle_views(res, u)
     assert e_seen == o_seen
@@ -121,14 +124,21 @@ def test_engine_bucketed_fetch_matches_oracle(spark, lake, universe):
     assert e_nodes == o_nodes and e_edges == o_edges and e_pubs == o_pubs
 
 
-def test_engine_auto_fetch_switches_by_batch_size(spark, lake):
-    """fetch_mode='auto' picks the bucketed join once the scheduled
-    batch reaches fetch_auto_threshold (here: 1, so every wave goes
-    bucketed) and stays oracle-exact."""
+def test_engine_auto_fetch_switches_by_batch_size(spark, lake, monkeypatch):
+    """The engine picks the fetch plan per wave from the scheduled
+    batch size. With the switch moved to the median scheduled wave,
+    one crawl runs waves through both the broadcast and the bucketed
+    plan and stays oracle-exact: crawl order, seen set and the full
+    summary equal the reference semantics. The plan shapes are pinned
+    in tests/test_bucketed.py."""
     u = fixtures.make_universe(n_authors=60, n_pubs=150, n_venues=5, seed=3)
     res = oracle.run_oracle(u, host_budget=None, max_attempts=2)
-    run_engine(spark, lake, u, host_budget=None, max_attempts=2,
-               fetch_mode="auto", fetch_auto_threshold=1, fetch_buckets=8)
+    scheduled = sorted(m["scheduled"] for m in res.metrics)
+    switch = scheduled[len(scheduled) // 2]
+    assert 0 < scheduled[0] < switch  # a non-empty broadcast wave, and a bucketed one
+    monkeypatch.setattr(crawl, "BUCKETED_FETCH_ROWS", switch)
+    run_engine(spark, lake, u, host_budget=None, max_attempts=2, fetch_buckets=8)
+    assert os.path.exists(os.path.join(lake.root, "pages_person_bucketed_8.json"))
     e_order, e_seen, e_nodes, e_edges, e_pubs = collect_engine(lake)
     o_order, o_seen, o_nodes, o_edges, o_pubs = oracle_views(res, u)
     assert e_seen == o_seen

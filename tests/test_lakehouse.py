@@ -17,8 +17,8 @@ def test_overwrite_and_read(spark, lake):
 
 def test_fast_append_accumulates(spark, lake):
     lake.overwrite("t", _df(spark, [("a", 0)]))
-    lake.append("t", _df(spark, [("b", 1)]), schemas.SEEN_PUBS)
-    lake.append("t", _df(spark, [("c", 2)]), schemas.SEEN_PUBS)
+    lake.append("t", _df(spark, [("b", 1)]))
+    lake.append("t", _df(spark, [("c", 2)]))
     assert {r.key for r in lake.read("t").collect()} == {"a", "b", "c"}
     # append is metadata-only: 3 snapshots, each readable (time travel)
     assert lake.snapshots("t") == [0, 1, 2]
@@ -32,23 +32,24 @@ def test_merge_refuses_table_not_keyed_by_call(spark, lake, verb):
     table is refused, naming the table and keys, and left as it was."""
     merge = getattr(lake, verb)
     batch = _df(spark, [("b", 9), ("c", 1)])
+    args = (batch, ["key"]) + ((schemas.SEEN_PUBS,) if verb == "merge_upsert" else ())
     lake.overwrite("t", _df(spark, [("a", 0), ("b", 0)]))
     lake.overwrite("w", _df(spark, [("a", 0)]), merge_keys=["wave"])
     with pytest.raises(ValueError, match=r"table t is keyed by None, cannot MERGE on \['key'\]"):
-        merge("t", batch, ["key"], schemas.SEEN_PUBS)
+        merge("t", *args)
     with pytest.raises(ValueError, match=r"table w is keyed by \['wave'\], cannot MERGE on \['key'\]"):
-        merge("w", batch, ["key"], schemas.SEEN_PUBS)
+        merge("w", *args)
     assert lake.snapshots("t") == [0] and lake.snapshots("w") == [0]
     assert {r.key: r.wave for r in lake.read("t").collect()} == {"a": 0, "b": 0}
 
 
 def test_rollback(spark, lake):
     lake.overwrite("t", _df(spark, [("a", 0)]))
-    lake.append("t", _df(spark, [("b", 1)]), schemas.SEEN_PUBS)
+    lake.append("t", _df(spark, [("b", 1)]))
     lake.rollback("t", 0)
     assert {r.key for r in lake.read("t").collect()} == {"a"}
     # a write after rollback forks history without clobbering old data
-    lake.append("t", _df(spark, [("z", 7)]), schemas.SEEN_PUBS)
+    lake.append("t", _df(spark, [("z", 7)]))
     assert {r.key for r in lake.read("t").collect()} == {"a", "z"}
 
 
@@ -73,7 +74,7 @@ def test_keyed_merge_upsert_writes_delta_only(spark, lake):
 
 def test_keyed_append_new_writes_delta_only(spark, lake):
     lake.overwrite("t", _df(spark, [("a", 0)]), merge_keys=["key"])
-    lake.append_new("t", _df(spark, [("a", 9), ("b", 1)]), ["key"], schemas.SEEN_PUBS)
+    lake.append_new("t", _df(spark, [("a", 9), ("b", 1)]), ["key"])
     m = lake.manifest("t")
     assert m["layers"][-1]["rows"] == 1  # only the unmatched row landed
     got = {r.key: r.wave for r in lake.read("t").collect()}
@@ -110,7 +111,7 @@ def test_manifest_row_counts_no_spark_job(spark, lake):
     commit time — the wave driver's action diet reads these instead
     of running count() jobs."""
     lake.overwrite("t", _df(spark, [("a", 0), ("b", 0)]))
-    lake.append("t", _df(spark, [("c", 1)]), schemas.SEEN_PUBS)
+    lake.append("t", _df(spark, [("c", 1)]))
     assert lake.n_rows("t") == 3
     assert lake.layer_rows("t") == 1
     # per-partition lineage: every layer carries per-file counters
@@ -211,13 +212,13 @@ def test_append_nonempty_skips_empty_batches(spark, lake):
 
     lake.overwrite("t", _df(spark, [("a", 0)]))
     head0 = lake.current_snapshot("t")
-    n = lake.append_nonempty("t", _df(spark, []), _df(spark, [("x", 0)]).schema)
+    n = lake.append_nonempty("t", _df(spark, []))
     assert n == 0
     assert lake.current_snapshot("t") == head0 and lake.n_layers("t") == 1
     # the rolled-back layer dir is gone
     dirs = [d for d in os.listdir(lake._tdir("t")) if d.startswith("data-")]
     assert len(dirs) == 1
-    n = lake.append_nonempty("t", _df(spark, [("b", 1)]), _df(spark, [("x", 0)]).schema)
+    n = lake.append_nonempty("t", _df(spark, [("b", 1)]))
     assert n == 1 and lake.n_layers("t") == 2
     assert {r.key for r in lake.read("t").collect()} == {"a", "b"}
 
@@ -228,7 +229,7 @@ def test_merge_small_layers_bounds_append_table(spark, lake):
     row-identical, time travel intact (verdict r2 item 8)."""
     expected = set()
     for i in range(30):
-        lake.append("t", _df(spark, [(f"k{i}", i)]), schemas.SEEN_PUBS)
+        lake.append("t", _df(spark, [(f"k{i}", i)]))
         expected.add((f"k{i}", i))
         if (i + 1) % 5 == 0:
             lake.merge_small_layers("t", max_layers=4)
@@ -245,7 +246,7 @@ def test_merge_small_layers_bounds_append_table(spark, lake):
 
 def test_merge_small_layers_noop_under_bound(spark, lake):
     lake.overwrite("t", _df(spark, [("a", 0)]))
-    lake.append("t", _df(spark, [("b", 1)]), schemas.SEEN_PUBS)
+    lake.append("t", _df(spark, [("b", 1)]))
     snap = lake.current_snapshot("t")
     assert lake.merge_small_layers("t", max_layers=4) == snap  # no new commit
     assert lake.n_layers("t") == 2
@@ -273,10 +274,10 @@ def test_expire_snapshots_refcounts_shared_layers(spark, lake):
 
     schema = StructType([StructField("x", LongType())])
     df = lambda vals: spark.createDataFrame([(v,) for v in vals], schema)
-    lake.append("t", df([1]), schema)          # snap 0, layer A
-    lake.append("t", df([2]), schema)          # snap 1 = A + B
-    lake.append("t", df([3]), schema)          # snap 2 = A + B + C
-    lake.append("t", df([4]), schema)          # snap 3 = A + B + C + D
+    lake.append("t", df([1]))  # snap 0, layer A
+    lake.append("t", df([2]))  # snap 1 = A + B
+    lake.append("t", df([3]))  # snap 2 = A + B + C
+    lake.append("t", df([4]))  # snap 3 = A + B + C + D
     before = sorted(r.x for r in lake.read("t").collect())
     rep = lake.expire_snapshots("t", retain_last=2)
     assert rep["expired"] == [0, 1]

@@ -100,7 +100,7 @@ def test_resume_discards_partial_wave(spark, lake, universe):
     # simulate a torn wave: extra uncommitted-by-manifest garbage commit
     import pyspark.sql.functions as F
 
-    lake.append("seen_pubs", lake.read("seen_pubs").limit(1).withColumn("key", F.lit("GARBAGE")), None)
+    lake.append("seen_pubs", lake.read("seen_pubs").limit(1).withColumn("key", F.lit("GARBAGE")))
     eng2 = CrawlEngine.resume(spark, lake)
     assert lake.read("seen_pubs").filter("key = 'GARBAGE'").count() == 0
     eng2.run_to_end()
@@ -115,7 +115,10 @@ def test_resume_rule_for_removed_config_fields(spark, lake, universe):
     removed resumes to the oracle when all hold their old defaults;
     any other value is refused, naming the field (a resumed cuckoo
     crawl would probe an empty bloom bank; another compaction cadence
-    is no longer honoured)."""
+    is no longer honoured). The plan-only fields `fetch_mode` and
+    `fetch_auto_threshold` are dropped whatever they hold (every
+    fetch plan is oracle-exact): the resumed state holds non-default
+    values of both and still finishes oracle-exact."""
     u = universe
     fixtures.write_tables(spark, lake, u)
     cfg = CrawlConfig(year=u.year_filter, rules=u.keyword_rules, host_budget=8, max_attempts=2,
@@ -126,7 +129,8 @@ def test_resume_rule_for_removed_config_fields(spark, lake, universe):
     path = os.path.join(lake.root, "crawl_state.json")
     with open(path) as f:
         state = json.load(f)
-    old = {"seen_filter_kind": "bloom", "adaptive_waves": False, "compact_every": 8, "max_append_layers": 8}
+    old = {"seen_filter_kind": "bloom", "adaptive_waves": False, "compact_every": 8, "max_append_layers": 8,
+           "fetch_mode": "bucketed", "fetch_auto_threshold": 5}
     for edit in [{"seen_filter_kind": "cuckoo"}, {"adaptive_waves": True}, {"compact_every": 2}, {}]:
         with open(path, "w") as f:
             json.dump({**state, "config": {**state["config"], **old, **edit}}, f)

@@ -4,8 +4,11 @@ Round 4 measured the broadcast fetch join dying at north-rule wave
 sizes (0.549 eff at a 2M-row full-frontier wave) THROUGH THE BENCH
 TOOL, and fixed it with the bucketed store layout — but the fix was
 reachable only from tools/throughput_job.py. Round 5 wired it into
-the engine (CrawlConfig.fetch_mode='bucketed'); this tool produces
-the required evidence THROUGH THE ENGINE: a full `CrawlEngine
+the engine, which now picks it by itself for any wave scheduling at
+least plans.crawl.BUCKETED_FETCH_ROWS (1M) urls, so the default
+N = 2M wave runs the bucketed plan (a wave below it broadcasts; the
+broadcast-at-scale A/B is tools/throughput_job.py --fetch). This tool
+produces the evidence THROUGH THE ENGINE: a full `CrawlEngine
 .run_wave()` — politeness pop → crawl-order sequencing → fetch join
 → expansion → filter → seen dedup → discovery → MoR commits — over
 an N-row full-frontier wave, timed at two parallelism levels on the
@@ -16,7 +19,8 @@ Phases (same discipline as tools/throughput_job.py):
   --prepare  build the lake once: N seed persons (85% on the hot
              host), each person page carrying 2 pubs x 2 authors
              (so expansion/discovery do real work), engine
-             initialized, bucketed page layout built, and the
+             initialized, bucketed page layout built (when the wave
+             reads it: N ≥ BUCKETED_FETCH_ROWS), and the
              post-initialize state manifest snapshotted to
              state0.json;
   --measure  per run: restore state0.json + CrawlEngine.resume
@@ -61,20 +65,11 @@ def _spark(master: str | None, shuffle: int | None, workdir: str) -> SparkSessio
     )
 
 
-def _config(fetch: str):
-    from dblp_crawler_spark.plans.crawl import CrawlConfig
-
-    return CrawlConfig(
-        year=2000, rules=[], host_budget=None, use_robots=False,
-        fetch_mode=fetch, fetch_buckets=N_BUCKETS,
-    )
-
-
-def prepare(spark: SparkSession, workdir: str, n: int, fetch: str) -> None:
+def prepare(spark: SparkSession, workdir: str, n: int) -> None:
     from dblp_crawler_spark import schemas
     from dblp_crawler_spark.lakehouse import Lakehouse
     from dblp_crawler_spark.operators.frontier import host_expr
-    from dblp_crawler_spark.plans.crawl import CrawlEngine
+    from dblp_crawler_spark.plans.crawl import BUCKETED_FETCH_ROWS, CrawlConfig, CrawlEngine
 
     lake = Lakehouse(spark, os.path.join(workdir, "lake"))
     base = spark.range(n).select(
@@ -117,15 +112,17 @@ def prepare(spark: SparkSession, workdir: str, n: int, fetch: str) -> None:
         F.lit(None).cast(schemas.JOURNAL_PAYLOAD).alias("journal"),
     ).repartition(max(32, n // 50_000))
     lake.overwrite("pages", pages)
-    eng = CrawlEngine(spark, lake, _config(fetch))
+    eng = CrawlEngine(spark, lake, CrawlConfig(
+        year=2000, rules=[], host_budget=None, use_robots=False, fetch_buckets=N_BUCKETS,
+    ))
     eng.initialize()
-    if fetch == "bucketed":
+    if n >= BUCKETED_FETCH_ROWS:  # the wave schedules all n seeds
         eng.ensure_bucketed_pages()  # one-time layout build, untimed
     shutil.copy(os.path.join(lake.root, "crawl_state.json"),
                 os.path.join(workdir, "state0.json"))
 
 
-def measure(spark: SparkSession, workdir: str, fetch: str, runs: int, warmup: bool) -> dict:
+def measure(spark: SparkSession, workdir: str, runs: int, warmup: bool) -> dict:
     from dblp_crawler_spark.lakehouse import Lakehouse
     from dblp_crawler_spark.plans.crawl import CrawlEngine
 
@@ -134,10 +131,7 @@ def measure(spark: SparkSession, workdir: str, fetch: str, runs: int, warmup: bo
     def fresh_engine():
         shutil.copy(os.path.join(workdir, "state0.json"),
                     os.path.join(lake.root, "crawl_state.json"))
-        eng = CrawlEngine.resume(spark, lake)  # rolls tables back
-        eng.cfg.fetch_mode = fetch
-        eng.cfg.fetch_buckets = N_BUCKETS
-        return eng
+        return CrawlEngine.resume(spark, lake)  # rolls tables back
 
     if warmup:
         fresh_engine().run_wave()  # untimed: workers, codegen, page cache
@@ -157,7 +151,6 @@ def measure(spark: SparkSession, workdir: str, fetch: str, runs: int, warmup: bo
 
     return {
         "master": spark.sparkContext.master,
-        "fetch": fetch,
         "n_scheduled": scheduled,
         "seconds": best,
         "seconds_median": round(med, 3),
@@ -170,7 +163,7 @@ def measure(spark: SparkSession, workdir: str, fetch: str, runs: int, warmup: bo
     }
 
 
-def run_pair(n: int, workdir: str, masters: tuple[str, str], runs: int, fetch: str) -> dict:
+def run_pair(n: int, workdir: str, masters: tuple[str, str], runs: int) -> dict:
     """spark-submit the prepare once and the measure at both levels
     (fresh JVM per level, the north_rule deployment shape)."""
     from bench_scaling import build_pkg_zip, spark_submit
@@ -180,18 +173,17 @@ def run_pair(n: int, workdir: str, masters: tuple[str, str], runs: int, fetch: s
     import bench_scaling as BS
 
     BS.JOB = os.path.abspath(__file__)  # submit THIS job, not throughput_job
-    indir = os.path.join(workdir, f"engine_n{n}_{fetch}")
+    indir = os.path.join(workdir, f"engine_n{n}")
     if not os.path.exists(os.path.join(indir, "state0.json")):
-        spark_submit(masters[1], pyz, ["--prepare", "--dir", indir, "--n", str(n), "--fetch", fetch])
+        spark_submit(masters[1], pyz, ["--prepare", "--dir", indir, "--n", str(n)])
     res = {}
     for m in masters:
-        res[m] = spark_submit(m, pyz, ["--measure", "--dir", indir, "--runs", str(runs), "--fetch", fetch])
+        res[m] = spark_submit(m, pyz, ["--measure", "--dir", indir, "--runs", str(runs)])
     lo, hi = res[masters[0]], res[masters[1]]
     eff_best = (hi["urls_per_sec"] / lo["urls_per_sec"]) / 4.0
     eff_med = (hi["urls_per_sec_median"] / lo["urls_per_sec_median"]) / 4.0
     return {
         "n_urls": n,
-        "fetch": fetch,
         "through": "CrawlEngine.run_wave",
         "low": lo,
         "high": hi,
@@ -202,8 +194,7 @@ def run_pair(n: int, workdir: str, masters: tuple[str, str], runs: int, fetch: s
     }
 
 
-def run_pair_interleaved(n: int, workdir: str, masters: tuple[str, str], rounds: int,
-                         fetch: str) -> dict:
+def run_pair_interleaved(n: int, workdir: str, masters: tuple[str, str], rounds: int) -> dict:
     """ABAB protocol (same discipline as bench_scaling): alternate
     N / 4N submits and pair each round's adjacent timings into a
     per-round efficiency — host drift hits both levels of a round
@@ -216,13 +207,13 @@ def run_pair_interleaved(n: int, workdir: str, masters: tuple[str, str], rounds:
     import bench_scaling as BS
 
     BS.JOB = os.path.abspath(__file__)
-    indir = os.path.join(workdir, f"engine_n{n}_{fetch}")
+    indir = os.path.join(workdir, f"engine_n{n}")
     if not os.path.exists(os.path.join(indir, "state0.json")):
-        spark_submit(masters[1], pyz, ["--prepare", "--dir", indir, "--n", str(n), "--fetch", fetch])
+        spark_submit(masters[1], pyz, ["--prepare", "--dir", indir, "--n", str(n)])
     pairs, lo_runs, hi_runs = [], [], []
     for _ in range(rounds):
-        lo = spark_submit(masters[0], pyz, ["--measure", "--dir", indir, "--runs", "1", "--fetch", fetch])
-        hi = spark_submit(masters[1], pyz, ["--measure", "--dir", indir, "--runs", "1", "--fetch", fetch])
+        lo = spark_submit(masters[0], pyz, ["--measure", "--dir", indir, "--runs", "1"])
+        hi = spark_submit(masters[1], pyz, ["--measure", "--dir", indir, "--runs", "1"])
         lo_runs.append(lo["seconds"])
         hi_runs.append(hi["seconds"])
         pairs.append((hi["urls_per_sec"] / lo["urls_per_sec"]) / 4.0)
@@ -231,7 +222,6 @@ def run_pair_interleaved(n: int, workdir: str, masters: tuple[str, str], rounds:
     med = (srt[len(srt) // 2] + srt[(len(srt) - 1) // 2]) / 2
     return {
         "n_urls": n,
-        "fetch": fetch,
         "through": "CrawlEngine.run_wave",
         "protocol": "interleaved",
         "masters": list(masters),
@@ -255,7 +245,6 @@ def main() -> None:
     ap.add_argument("--dir", default="/tmp/spark_graft_engine_scaling")
     ap.add_argument("--n", type=int, default=2_000_000)
     ap.add_argument("--runs", type=int, default=3)
-    ap.add_argument("--fetch", choices=["broadcast", "bucketed"], default="bucketed")
     ap.add_argument("--master", default=None)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--no-warmup", action="store_true")
@@ -266,11 +255,11 @@ def main() -> None:
 
         git = refuse_if_dirty(allow=args.allow_dirty)
         if args.interleave:
-            out = run_pair_interleaved(args.n, args.dir, ("local[4]", "local[16]"), args.runs, args.fetch)
-            name = f"engine_scaling_{args.fetch}_interleaved.json"
+            out = run_pair_interleaved(args.n, args.dir, ("local[4]", "local[16]"), args.runs)
+            name = "engine_scaling_interleaved.json"
         else:
-            out = run_pair(args.n, args.dir, ("local[4]", "local[16]"), args.runs, args.fetch)
-            name = f"engine_scaling_{args.fetch}.json"
+            out = run_pair(args.n, args.dir, ("local[4]", "local[16]"), args.runs)
+            name = "engine_scaling.json"
         out.update(git)
         cache = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".bench")
         os.makedirs(cache, exist_ok=True)
@@ -281,10 +270,10 @@ def main() -> None:
     spark = _spark(args.master, args.shuffle_partitions, args.dir)
     try:
         if args.prepare:
-            prepare(spark, args.dir, args.n, args.fetch)
-            print(json.dumps({"prepared": args.n, "dir": args.dir, "fetch": args.fetch}))
+            prepare(spark, args.dir, args.n)
+            print(json.dumps({"prepared": args.n, "dir": args.dir}))
         if args.measure:
-            print(json.dumps(measure(spark, args.dir, args.fetch, args.runs, warmup=not args.no_warmup)))
+            print(json.dumps(measure(spark, args.dir, args.runs, warmup=not args.no_warmup)))
     finally:
         spark.stop()
 
